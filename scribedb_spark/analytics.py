@@ -3727,6 +3727,8 @@ def _iblt_decode(
     by_key: dict[int, set] = {}
     for key, _fp, s in _iblt_peel(cells, n_cells):
         by_key.setdefault(key, set()).add(s)
+    # sorted on the driver: a Spark orderBy of this local relation
+    # would cost a sampling job and a sort job per decode
     out = [
         (
             key,
@@ -3734,11 +3736,9 @@ def _iblt_decode(
             if sides == {1, -1}
             else ("removed" if sides == {1} else "added"),
         )
-        for key, sides in by_key.items()
+        for key, sides in sorted(by_key.items())
     ]
-    return spark.createDataFrame(
-        out, f"{key_col} long, change string"
-    ).orderBy(key_col)
+    return spark.createDataFrame(out, f"{key_col} long, change string")
 
 
 def iblt_reconcile(

@@ -171,6 +171,7 @@ def global_row_number(
     sort_keys: list[str],
     out_col: str = "rn",
     num_partitions: int | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """1-based global row number over ``sort_keys`` WITHOUT the
     single-partition ``Window.orderBy`` bottleneck.
@@ -183,6 +184,13 @@ def global_row_number(
       3. per-partition counts -> driver (one tiny row per partition)
          -> cumulative offsets broadcast back.
 
+    ``by`` numbers several groups in that ONE pass: numbering restarts
+    at 1 for each ``by`` value (e.g. a side tag, so both sides of a
+    compare are chunked by one range partition, one checkpoint and one
+    count job instead of one of each per side). The range partition
+    leads with the ``by`` columns, so each group occupies a contiguous
+    run of partitions and its offsets accumulate over that run only.
+
     The reference leans on server-side LIMIT/OFFSET for the same job
     (reference scribedb/postgres.py:84-88) — O(chunks) re-sorts; this
     is one sort total.
@@ -190,11 +198,15 @@ def global_row_number(
     Determinism requires ``sort_keys`` to uniquely order rows; rows
     tying on every key get arbitrary (run-dependent) numbers. Callers
     needing run-stable output append a content tiebreaker — fp_chain
-    appends its canonical ``__txt`` column.
+    appends its canonical ``__txt`` column. Callers should narrow
+    ``df`` to the columns they need first: the partitioned input is
+    checkpointed whole.
     """
+    by = list(by or [])
     sc = [F.col(k) for k in sort_keys]
+    order = [F.col(c) for c in by] + sc
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *sc).sortWithinPartitions(*sc)
+    parted = df.repartitionByRange(n, *order).sortWithinPartitions(*order)
     parted = parted.withColumn("__pid", F.spark_partition_id())
     # localCheckpoint so the pid->count map and the local row numbers
     # see the exact same partitioning (repartitionByRange SAMPLES its
@@ -204,24 +216,38 @@ def global_row_number(
     # reclaimed by the ContextCleaner when the plan is dropped instead
     # of pinning cache across keys in a long-lived session.
     parted = parted.localCheckpoint()
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
+    counts = (
+        parted.groupBy("__pid", *by)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    )
     if not counts:  # empty input: create_map() with zero args is invalid
         return df.withColumn(out_col, F.lit(None).cast("long"))
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("__pid").orderBy(*sc)
+    # map key: the partition id, or (partition id, group) with ``by``
+    types = [df.schema[c].dataType for c in by]
+
+    def key_lit(r) -> Column:
+        if not by:
+            return F.lit(r["__pid"])
+        return F.struct(
+            F.lit(r["__pid"]).alias("p"),
+            *[F.lit(r[c]).cast(t).alias(c) for c, t in zip(by, types)],
+        )
+
+    offsets = []
+    before: dict[tuple, int] = {}
+    for r in sorted(counts, key=lambda r: r["__pid"]):
+        g = tuple(r[c] for c in by)
+        offsets += [key_lit(r), F.lit(before.get(g, 0))]
+        before[g] = before.get(g, 0) + r["cnt"]
+    off_map = F.create_map(*offsets)
+    key = F.col("__pid")
+    if by:
+        key = F.struct(key.alias("p"), *[F.col(c) for c in by])
+    w = Window.partitionBy("__pid", *by).orderBy(*sc)
     out = (
         parted.withColumn("__local_rn", F.row_number().over(w))
-        .withColumn(out_col, (F.col("__local_rn") + off_map[F.col("__pid")]).cast("long"))
+        .withColumn(out_col, (F.col("__local_rn") + off_map[key]).cast("long"))
         .drop("__pid", "__local_rn")
     )
     return out

@@ -5,8 +5,18 @@ validate arity -> calibrate chunk size -> per-chunk server-side hash ->
 on mismatch fetch rows and print the symmetric set difference -> raise
 if different. Re-expressed here as ONE declarative pipeline:
 
-    spec -> schema check -> per-side fingerprints -> fingerprint join
-         -> (only if unequal) row-level diff via anti-joins -> result
+    spec -> schema check -> side-tagged union of both sides
+         -> one grouped fingerprint per side (the verdict)
+         -> (only if unequal) key check, symmetric diff checkpointed
+            once, keyed reports paired from the diff rows -> result
+
+One plan for both sides: the reference hashes each side inside its own
+database; here every per-side pass — verdict fingerprint, row
+numbering, chunk fingerprints, merkle levels, key-uniqueness and IBLT
+guards — runs ONCE over the union of both sides tagged with a side
+column (``_tag_sides``), with per-side results as grouped or
+conditional aggregates. Each input is read once per pass, not once
+per side per pass.
 
 Differences by design (SURVEY.md §7):
 - No calibration: the reference times probe queries to pick a bucket
@@ -24,10 +34,11 @@ Differences by design (SURVEY.md §7):
   reference main.py:153) and ``row_limit`` (reference
   scribedb/base.py:15, also unused) actually work here.
 
-Scale: the diff path is join-shaped (exceptAll == hash aggregation on
-all columns; keyed diff == full-outer join on the key), so AQE/skew
-handling applies; nothing is collected to the driver except the
-verdict scalars and an optionally row-capped diff sample.
+Scale: the diff is one hash aggregation on all columns (exceptAll in
+both directions), so AQE/skew handling applies; the keyed reports
+join only the diff's rows, never the inputs. Nothing is collected to
+the driver except the verdict scalars and an optionally row-capped
+diff sample.
 """
 
 from __future__ import annotations
@@ -114,6 +125,45 @@ def check_schema(src: DataFrame, tgt: DataFrame, strict: bool = False) -> None:
             raise SchemaMismatch(f"schemas differ: {s} vs {t}")
 
 
+#: side-tag column of a both-sides union (values 'src' / 'tgt')
+_SIDE = "__cmp_side"
+
+
+def _tag_sides(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """Both sides as ONE frame with a ``_SIDE`` tag column, so every
+    per-side pass (fingerprint, row numbering, chunk and tree hashes,
+    key checks) runs once over the union instead of once per side.
+    Target columns align positionally, as the reference compares tuples
+    by position (names may differ across sides)."""
+    return src.withColumn(_SIDE, F.lit("src")).unionByName(
+        tgt.toDF(*src.columns).withColumn(_SIDE, F.lit("tgt"))
+    )
+
+
+def _require_unique_keys(
+    src: DataFrame, tgt: DataFrame, keys: list[str], who: str
+) -> None:
+    """Raise unless ``keys`` is unique on each side — both sides checked
+    by ONE grouped job over the side-tagged union. The error names the
+    side (src first when both have duplicates)."""
+    dup = {
+        r[_SIDE]
+        for r in _tag_sides(src, tgt)
+        .groupBy(_SIDE, *keys)
+        .count()
+        .filter(F.col("count") > 1)
+        .select(_SIDE)
+        .distinct()
+        .collect()
+    }
+    for name in ("src", "tgt"):
+        if name in dup:
+            raise ValueError(
+                f"{who}: key {keys} is not unique on the {name} side; "
+                "pass a unique key or validate_keys=False"
+            )
+
+
 def symmetric_diff(src: DataFrame, tgt: DataFrame, distinct: bool = False) -> DataFrame:
     """E1: symmetric difference, tagged by side (reference
     ``compare_d7``, main.py:116-137). Bag semantics unless
@@ -127,16 +177,10 @@ def symmetric_diff(src: DataFrame, tgt: DataFrame, distinct: bool = False) -> Da
     explode(sequence). Two exceptAlls would shuffle the full data
     twice and scan each side twice."""
     a, b = (src.distinct(), tgt.distinct()) if distinct else (src, tgt)
-    # align target columns positionally, as the reference compares
-    # tuples by position (names may differ across sides)
-    b = b.toDF(*a.columns)
     cols = a.columns
-    u = a.withColumn("__side", F.lit("src")).unionByName(
-        b.withColumn("__side", F.lit("tgt"))
-    )
-    g = u.groupBy(*cols).agg(
-        F.sum(F.when(F.col("__side") == "src", 1).otherwise(0)).alias("__ns"),
-        F.sum(F.when(F.col("__side") == "tgt", 1).otherwise(0)).alias("__nt"),
+    g = _tag_sides(a, b).groupBy(*cols).agg(
+        F.sum(F.when(F.col(_SIDE) == "src", 1).otherwise(0)).alias("__ns"),
+        F.sum(F.when(F.col(_SIDE) == "tgt", 1).otherwise(0)).alias("__nt"),
     )
     surplus = g.filter(F.col("__ns") != F.col("__nt")).select(
         *cols,
@@ -161,9 +205,9 @@ def keyed_diff(
 
     A non-unique key makes the full-outer join cross-pair duplicates
     and the classification meaningless, so keys are validated by
-    default (one cheap groupBy-count per side — partial aggregation,
-    tiny shuffle). Disable with ``validate_keys=False`` when the key
-    is known-unique (e.g. enforced upstream).
+    default (one cheap groupBy-count over both sides — partial
+    aggregation, tiny shuffle). Disable with ``validate_keys=False``
+    when the key is known-unique (e.g. enforced upstream).
 
     Key matching is NULL-SAFE: a null key on both sides pairs up
     (groupBy already treats nulls as one group for the uniqueness
@@ -172,19 +216,7 @@ def keyed_diff(
     """
     tgt = tgt.toDF(*src.columns)
     if validate_keys:
-        for name, df in (("src", src), ("tgt", tgt)):
-            dup = (
-                df.groupBy(*keys)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    f"keyed_diff: key {keys} is not unique on the {name} side; "
-                    "pass a unique key or validate_keys=False"
-                )
+        _require_unique_keys(src, tgt, keys, "keyed_diff")
     payload = [c for c in src.columns if c not in keys]
     if not payload:
         raise ValueError(
@@ -236,15 +268,7 @@ def keyed_diff_cols(
     """
     tgt = tgt.toDF(*src.columns)
     if validate_keys:
-        for name, df in (("src", src), ("tgt", tgt)):
-            dup = (
-                df.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-            )
-            if dup:
-                raise ValueError(
-                    f"keyed_diff_cols: key {keys} is not unique on the {name} "
-                    "side; pass a unique key or validate_keys=False"
-                )
+        _require_unique_keys(src, tgt, keys, "keyed_diff_cols")
     payload = [c for c in src.columns if c not in keys]
     if not payload:
         raise ValueError(
@@ -364,35 +388,70 @@ def tolerance_diff(
     return j.select(*out_cols).filter(viol_any)
 
 
+def _side_chunks(
+    tagged: DataFrame,
+    cols: list[str],
+    sort_keys: list[str],
+    bucket_rows: int,
+    sides: tuple[str, ...] = ("src", "tgt"),
+) -> DataFrame:
+    """Per-chunk commutative fingerprints of every side of a
+    side-tagged frame (``_tag_sides``) in ONE numbering pass and ONE
+    aggregation: ``chunk_id`` plus ``<side>_fp`` (DECIMAL(38,0) sum of
+    60-bit row-md5 slices) and ``<side>_rows`` per side, NULL for a
+    side with no rows in that chunk. Chunks are ``bucket_rows``-row
+    runs of each side's own ``sort_keys`` order.
+
+    Only (sort keys, side, row md5) cross the range shuffle and the
+    checkpoint — the row text is hashed map-side first, the way
+    fp_chain narrows its input to (sort keys, text)."""
+    from scribedb_spark.canonical import _fp_term, fp_row_md5, global_row_number
+
+    narrow = fp_row_md5(tagged, cols).select(
+        *dict.fromkeys(sort_keys), _SIDE, "row_md5"
+    )
+    numbered = global_row_number(narrow, list(dict.fromkeys(sort_keys)), by=[_SIDE])
+    aggs = []
+    for side in sides:
+        on = F.col(_SIDE) == side
+        aggs += [
+            F.sum(F.when(on, _fp_term(F.col("row_md5")))).alias(f"{side}_fp"),
+            F.sum(F.when(on, F.lit(1))).alias(f"{side}_rows"),
+        ]
+    return numbered.groupBy(
+        F.expr(f"(rn - 1) div {bucket_rows}").alias("chunk_id")
+    ).agg(*aggs)
+
+
 def chunk_fingerprints(
     src: DataFrame,
     tgt: DataFrame,
     spec: CompareSpec,
 ) -> DataFrame:
-    """Per-chunk fingerprint join — the reference's chunk loop
+    """Per-chunk fingerprint report — the reference's chunk loop
     (reference main.py:216-247) as one plan. Returns
-    ``chunk_id, src_fp, tgt_fp, src_rows, tgt_rows, status``."""
+    ``chunk_id, src_fp, src_rows, tgt_fp, tgt_rows, status``; a chunk
+    present on one side only has NULL fingerprint and row count on the
+    other and is NOK.
+
+    Unordered mode (default) numbers and hashes BOTH sides in one pass
+    over their side-tagged union (``_side_chunks``): one range
+    partition, one checkpoint, one grouped aggregation with per-side
+    conditional sums. Chained mode folds each side's chunks with
+    ``fp_chain`` and full-outer joins the two chunk tables."""
     sort_keys = spec.sort_keys or src.columns
-    if spec.hash_mode == "chained":
-        sfp = fp_chain(src, sort_keys, spec.bucket_rows)
-        tfp = fp_chain(tgt.toDF(*src.columns), sort_keys, spec.bucket_rows)
-    else:
-        from scribedb_spark.canonical import fp_row_md5, global_row_number
-
-        def chunked_unordered(df: DataFrame) -> DataFrame:
-            numbered = global_row_number(fp_row_md5(df), sort_keys)
-            numbered = numbered.withColumn(
-                "chunk_id", ((F.col("rn") - 1) / F.lit(spec.bucket_rows)).cast("long")
-            )
-            from scribedb_spark.canonical import _fp_term
-
-            return numbered.groupBy("chunk_id").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(_fp_term(F.col("row_md5"))).cast("decimal(38,0)").alias("fp"),
-            )
-
-        sfp = chunked_unordered(src)
-        tfp = chunked_unordered(tgt.toDF(*src.columns))
+    status = F.when(
+        (F.col("src_fp") == F.col("tgt_fp"))
+        & (F.col("src_rows") == F.col("tgt_rows")),
+        F.lit("OK"),
+    ).otherwise(F.lit("NOK"))
+    if spec.hash_mode != "chained":
+        chunks = _side_chunks(
+            _tag_sides(src, tgt), src.columns, sort_keys, spec.bucket_rows
+        )
+        return chunks.withColumn("status", status).orderBy("chunk_id")
+    sfp = fp_chain(src, sort_keys, spec.bucket_rows)
+    tfp = fp_chain(tgt.toDF(*src.columns), sort_keys, spec.bucket_rows)
     s = sfp.select(
         "chunk_id", F.col("fp").alias("src_fp"), F.col("n_rows").alias("src_rows")
     )
@@ -400,14 +459,7 @@ def chunk_fingerprints(
         "chunk_id", F.col("fp").alias("tgt_fp"), F.col("n_rows").alias("tgt_rows")
     )
     j = s.join(t, "chunk_id", "full_outer")
-    return j.withColumn(
-        "status",
-        F.when(
-            (F.col("src_fp") == F.col("tgt_fp"))
-            & (F.col("src_rows") == F.col("tgt_rows")),
-            F.lit("OK"),
-        ).otherwise(F.lit("NOK")),
-    ).orderBy("chunk_id")
+    return j.withColumn("status", status).orderBy("chunk_id")
 
 
 def compare(
@@ -419,12 +471,25 @@ def compare(
 ) -> CompareResult:
     """End-to-end verdict (reference main.py:216-267).
 
-    Fast path: one commutative fingerprint per side (two aggregations,
-    no shuffle of full rows across sides). Only when fingerprints
-    disagree does the row-level diff plan execute — the same
-    early-exit/lazy-materialization shape as the reference
-    (reference main.py:228-239), but the "cheap check" is a full-data
-    parallel hash instead of N sequential chunk round-trips.
+    Fast path: one commutative fingerprint per side, both computed by
+    ONE grouped aggregation over the side-tagged union (no shuffle of
+    full rows across sides). Only when fingerprints disagree does the
+    row-level diff plan execute — the same early-exit/lazy-
+    materialization shape as the reference (reference
+    main.py:228-239), but the "cheap check" is a full-data parallel
+    hash instead of N sequential chunk round-trips.
+
+    Slow path, each step run once for both sides:
+    - keys (when ``spec.keys``) are checked unique on each side by one
+      grouped job over the tagged union;
+    - the symmetric diff is localCheckpoint'ed once; ``diff_count``,
+      the diff sample and the keyed reports all read that checkpoint;
+    - ``keyed_diff``/``changed_cols`` pair the diff's own src/tgt rows
+      by key instead of full-outer joining both whole inputs: with a
+      unique key per side, a key differs exactly when its rows are in
+      the bag diff, so the reports equal the full-data operators'.
+      Payload values read as the diff renders them: its grouping
+      normalizes -0.0 to 0.0 and every NaN to one NaN.
     """
     spec = spec or CompareSpec()
     check_schema(src, tgt, spec.strict_schema)
@@ -432,13 +497,10 @@ def compare(
     # both sides' fingerprints in ONE job: union with a side tag,
     # grouped aggregation — halves the scan/action count vs two
     # separate collects
-    tagged = src.withColumn("__cmp_side", F.lit("src")).unionByName(
-        tgt.toDF(*src.columns).withColumn("__cmp_side", F.lit("tgt"))
-    )
     fps = {
-        r["__cmp_side"]: r
+        r[_SIDE]: r
         for r in fp_unordered(
-            tagged, cols=src.columns, group_by=["__cmp_side"], algo="xxhash64"
+            _tag_sides(src, tgt), cols=src.columns, group_by=[_SIDE], algo="xxhash64"
         ).collect()
     }
     empty = {"n_rows": 0, "fp": None}
@@ -447,11 +509,13 @@ def compare(
 
     fast_equal = (sfp["fp"] == tfp["fp"]) and (src_rows == tgt_rows)
 
-    diff = symmetric_diff(src, tgt, spec.distinct)
     if fast_equal:
         diff_count = 0
-        diff = diff.limit(0)
+        diff = symmetric_diff(src, tgt, spec.distinct).limit(0)
     else:
+        if spec.keys:
+            _require_unique_keys(src, tgt, spec.keys, "keyed_diff")
+        diff = symmetric_diff(src, tgt, spec.distinct).localCheckpoint()
         diff_count = diff.count()
 
     result = CompareResult(
@@ -464,11 +528,10 @@ def compare(
     if with_chunks:
         result.chunk_status = chunk_fingerprints(src, tgt, spec)
     if spec.keys and not fast_equal:
-        result.keyed_diff = keyed_diff(src, tgt, spec.keys)
-        # keyed_diff already validated key uniqueness above
-        result.changed_cols = keyed_diff_cols(
-            src, tgt, spec.keys, validate_keys=False
-        )
+        s = diff.filter(F.col("side") == "src").drop("side")
+        t = diff.filter(F.col("side") == "tgt").drop("side")
+        result.keyed_diff = keyed_diff(s, t, spec.keys, validate_keys=False)
+        result.changed_cols = keyed_diff_cols(s, t, spec.keys, validate_keys=False)
     return result
 
 
@@ -554,53 +617,74 @@ MERKLE_FANOUT = 16
 _MERSENNE61 = 2305843009213693951
 
 
+def _merkle_tree(
+    tagged: DataFrame,
+    cols: list[str],
+    sort_keys: list[str],
+    bucket_rows: int,
+    sides: tuple[str, ...],
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one merkle builder: 3 levels over a side-tagged frame, every
+    side's tree in the same pass. Each level is ``node_id`` plus
+    ``h_<side>`` per side, NULL where that side has no node.
+
+    Level 0 is the per-chunk commutative fingerprint (``_side_chunks``:
+    ``bucket_rows``-row chunks in ``sort_keys`` order, 60-bit md5 sum
+    mod 2^61-1 rendered as a decimal string); each parent level hashes
+    its children's strings joined by ',' in node_id order (fanout
+    MERKLE_FANOUT), over the children that side has. A side's hashes
+    therefore equal those of a tree built from that side alone.
+
+    The chunk level is the only stage that touches the raw table and
+    is reused by every consumer (parents, per-level diffs), so it is
+    localCheckpoint'd — the in-session analog of writing each level
+    to a file."""
+    chunks = _side_chunks(tagged, cols, sort_keys, bucket_rows, sides)
+    l0 = chunks.select(
+        F.col("chunk_id").alias("node_id"),
+        *[
+            F.pmod(F.col(f"{side}_fp"), F.lit(_MERSENNE61))
+            .cast("long")
+            .cast("string")
+            .alias(f"h_{side}")
+            for side in sides
+        ],
+    ).localCheckpoint()
+
+    def up(level_df: DataFrame) -> DataFrame:
+        aggs = []
+        for side in sides:
+            h = F.col(f"h_{side}")
+            # collect_list skips the NULL structs of nodes this side lacks
+            kids = F.array_sort(
+                F.collect_list(
+                    F.when(h.isNotNull(), F.struct(F.col("node_id"), h.alias("h")))
+                )
+            )
+            joined = F.concat_ws(",", F.transform(kids, lambda k: k["h"]))
+            aggs.append(F.when(F.size(kids) > 0, F.md5(joined)).alias(f"h_{side}"))
+        return level_df.groupBy(
+            F.expr(f"node_id div {MERKLE_FANOUT}").alias("node_id")
+        ).agg(*aggs)
+
+    l1 = up(l0)
+    return l0, l1, up(l1)
+
+
 def merkle_levels(
     df: DataFrame,
     cols: list[str],
     sort_keys: list[str],
     bucket_rows: int = 1000,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build a 3-level merkle tree over a frame: level 0 is the
-    per-chunk commutative fingerprint (``bucket_rows``-row chunks in
-    ``sort_keys`` order, 60-bit md5 sum mod 2^61-1 rendered as a
-    decimal string), and each parent level hashes its children's
-    strings joined by ',' in node_id order (fanout MERKLE_FANOUT).
-    Persist the three levels next to a dataset snapshot and two
-    snapshots can be compared root-first (see ``merkle_drill``).
-
-    The chunk level is the only stage that touches the raw table and
-    is reused by every consumer (parents, per-level diffs), so it is
-    localCheckpoint'd — the in-session analog of writing each level
-    to a file."""
-    from scribedb_spark.canonical import fp_unordered, global_row_number
-
-    nb = global_row_number(df.select(*cols), sort_keys)
-    chunked = nb.withColumn("chunk_id", F.expr(f"(rn - 1) div {bucket_rows}"))
-    l0 = (
-        fp_unordered(chunked, cols, group_by=["chunk_id"])
-        .select(
-            F.col("chunk_id").alias("node_id"),
-            F.pmod(F.col("fp"), F.lit(_MERSENNE61))
-            .cast("long")
-            .cast("string")
-            .alias("h"),
-        )
-        .localCheckpoint()
-    )
-
-    def up(level_df: DataFrame) -> DataFrame:
-        kids = F.array_sort(
-            F.collect_list(F.struct(F.col("node_id"), F.col("h")))
-        )
-        joined = F.concat_ws(",", F.transform(kids, lambda s: s["h"]))
-        return (
-            level_df.groupBy(
-                F.expr(f"node_id div {MERKLE_FANOUT}").alias("node_id")
-            ).agg(F.md5(joined).alias("h"))
-        )
-
-    l1 = up(l0)
-    return l0, l1, up(l1)
+    """Build one frame's 3-level merkle tree, levels as (node_id, h):
+    the persisted-tree form. Persist the three levels next to a dataset
+    snapshot and two snapshots can be compared root-first (see
+    ``merkle_drill``). Same builder as ``merkle_drill``'s both-sides
+    pass (``_merkle_tree``), with one side."""
+    tagged = df.select(*cols).withColumn(_SIDE, F.lit("src"))
+    levels = _merkle_tree(tagged, cols, sort_keys, bucket_rows, ("src",))
+    return tuple(lv.select("node_id", F.col("h_src").alias("h")) for lv in levels)
 
 
 def merkle_drill(
@@ -612,42 +696,50 @@ def merkle_drill(
     src_levels: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     tgt_levels: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """Top-down merkle compare: build both trees, diff the roots, and
-    descend only subtrees whose hashes disagree — each level's diff is
-    an equi-join on node_id pruned by a left-semi join against the
-    PARENT level's differing set. Returns the level-0 chunks that
-    differ as (chunk_id, h_src, h_tgt): O(diff_chunks * fanout *
-    depth) probes where a flat chunk compare touches every chunk.
+    """Top-down merkle compare: diff the roots, and descend only
+    subtrees whose hashes disagree — each level's differing nodes are
+    pruned by a left-semi join against the PARENT level's differing
+    set. Returns the level-0 chunks that differ as (chunk_id, h_src,
+    h_tgt): O(diff_chunks * fanout * depth) probes where a flat chunk
+    compare touches every chunk.
+
+    Both trees come from ONE pass over the side-tagged union
+    (``_merkle_tree``): one numbering, one checkpoint, levels carrying
+    ``h_src``/``h_tgt`` side by side, so each level's diff is a filter
+    with no join. A node with a hash on one side only (e.g. a trailing
+    chunk only the longer side has) differs, at every level, and
+    surfaces with a NULL hash for the side that lacks it.
 
     ``src_levels`` / ``tgt_levels`` accept trees already built by
     ``merkle_levels`` — the persisted-tree usage pattern: a snapshot's
     tree is written once and every later compare probes it without
-    rescanning the table."""
-    s0, s1, s2 = src_levels or merkle_levels(src, cols, sort_keys, bucket_rows)
-    t0, t1, t2 = tgt_levels or merkle_levels(tgt, cols, sort_keys, bucket_rows)
-
-    def diff(sd: DataFrame, td: DataFrame) -> DataFrame:
-        return (
-            sd.alias("s")
-            .join(td.alias("t"), "node_id")
-            .filter(F.col("s.h") != F.col("t.h"))
-            .select(
-                "node_id",
-                F.col("s.h").alias("h_src"),
-                F.col("t.h").alias("h_tgt"),
+    rescanning the table. Those per-side levels are full-outer joined
+    on node_id into the same shape and run the same descent."""
+    if src_levels is None and tgt_levels is None:
+        tagged = _tag_sides(src.select(*cols), tgt.select(*cols))
+        levels = _merkle_tree(tagged, cols, sort_keys, bucket_rows, ("src", "tgt"))
+    else:
+        s = src_levels or merkle_levels(src, cols, sort_keys, bucket_rows)
+        t = tgt_levels or merkle_levels(tgt, cols, sort_keys, bucket_rows)
+        levels = tuple(
+            a.select("node_id", F.col("h").alias("h_src")).join(
+                b.select("node_id", F.col("h").alias("h_tgt")), "node_id", "full_outer"
             )
+            for a, b in zip(s, t)
         )
+    l0, l1, l2 = (
+        lv.filter(~F.col("h_src").eqNullSafe(F.col("h_tgt"))) for lv in levels
+    )
 
-    def descend(child_diff: DataFrame, parent_diff: DataFrame) -> DataFrame:
-        parents = parent_diff.select(F.col("node_id").alias("p"))
-        return child_diff.join(
+    def descend(child: DataFrame, parent: DataFrame) -> DataFrame:
+        parents = parent.select(F.col("node_id").alias("p"))
+        return child.join(
             parents,
             F.expr(f"node_id div {MERKLE_FANOUT}") == F.col("p"),
             "left_semi",
         )
 
-    d1 = descend(diff(s1, t1), diff(s2, t2))
-    d0 = descend(diff(s0, t0), d1)
+    d0 = descend(l0, descend(l1, l2))
     return d0.select(F.col("node_id").alias("chunk_id"), "h_src", "h_tgt")
 
 

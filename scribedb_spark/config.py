@@ -330,14 +330,26 @@ def run_iblt_config(spark: SparkSession, cfg: RootConfig) -> DataFrame:
     # Cheap loud guards for the documented preconditions: duplicate or
     # negative keys silently misclassify (XOR of equal keys cancels;
     # the peel classifier assumes one item per key per side). One
-    # partial-agg pass per side, cheap next to the sketch build.
-    for name, side in (("source", src), ("target", tgt)):
-        chk = side.agg(
+    # partial-agg pass grouped by side over both sides' keys, cheap
+    # next to the sketch build.
+    from scribedb_spark.compare import _SIDE, _tag_sides
+
+    checks = {
+        r[_SIDE]: r
+        for r in _tag_sides(src.select(key), tgt.select(key))
+        .groupBy(_SIDE)
+        .agg(
             F.count(F.lit(1)).alias("rows"),
             F.count(key).alias("n"),
             F.count_distinct(F.col(key)).alias("nd"),
             F.min(key).alias("mn"),
-        ).first()
+        )
+        .collect()
+    }
+    for name, side in (("source", "src"), ("target", "tgt")):
+        chk = checks.get(side)
+        if chk is None:  # an empty side has nothing to guard
+            continue
         if chk["rows"] != chk["n"]:
             # count()/count_distinct() skip NULLs, so a NULL key would
             # sail through the guards below and stall the decode with a

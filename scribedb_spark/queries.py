@@ -2998,15 +2998,20 @@ def _merkle_tree_sql(src_expr: str) -> str:
     + _merkle_tree_sql("tgt_rows").format(t="t")
     + """,
     d2 AS (
-      SELECT s.node_id FROM l2_s s JOIN l2_t t ON s.node_id = t.node_id
-      WHERE s.h <> t.h),
+      SELECT COALESCE(s.node_id, t.node_id) AS node_id
+      FROM l2_s s FULL JOIN l2_t t ON s.node_id = t.node_id
+      WHERE s.h IS DISTINCT FROM t.h),
     d1 AS (
-      SELECT s.node_id FROM l1_s s JOIN l1_t t ON s.node_id = t.node_id
-      WHERE s.h <> t.h AND s.node_id // 16 IN (SELECT node_id FROM d2)),
+      SELECT COALESCE(s.node_id, t.node_id) AS node_id
+      FROM l1_s s FULL JOIN l1_t t ON s.node_id = t.node_id
+      WHERE s.h IS DISTINCT FROM t.h
+        AND COALESCE(s.node_id, t.node_id) // 16 IN (SELECT node_id FROM d2)),
     d0 AS (
-      SELECT s.node_id, s.h AS h_src, t.h AS h_tgt
-      FROM l0_s s JOIN l0_t t ON s.node_id = t.node_id
-      WHERE s.h <> t.h AND s.node_id // 16 IN (SELECT node_id FROM d1))
+      SELECT COALESCE(s.node_id, t.node_id) AS node_id,
+             s.h AS h_src, t.h AS h_tgt
+      FROM l0_s s FULL JOIN l0_t t ON s.node_id = t.node_id
+      WHERE s.h IS DISTINCT FROM t.h
+        AND COALESCE(s.node_id, t.node_id) // 16 IN (SELECT node_id FROM d1))
     SELECT node_id AS chunk_id, h_src, h_tgt FROM d0
     """,
 )
@@ -3020,10 +3025,11 @@ def compare_merkle_drill(spark, sf_dir):
     one-divergent-chunk-in-a-million that is the difference between
     reading 3 tree files and re-reading the whole fingerprint table.
 
-    Each level's diff is an equi-join on node_id filtered by the
-    PARENT level's differing set (left-semi on parent id) — so the
-    descent itself is expressed as joins that prune, mirroring how a
-    persisted tree would be probed by file path at 100 TB."""
+    Each level's diff is a full-outer join on node_id (a node one tree
+    lacks differs) filtered by the PARENT level's differing set
+    (left-semi on parent id) — so the descent itself is expressed as
+    joins that prune, mirroring how a persisted tree would be probed
+    by file path at 100 TB."""
     from scribedb_spark.compare import merkle_drill
 
     cols = _MERKLE_COLS

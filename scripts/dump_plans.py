@@ -2,12 +2,23 @@
 query at sf0.01 — the plan-audit artifact reviewed each round.
 
     python scripts/dump_plans.py   # rewrites PLANS.md at the repo root
+
+With ``--cli-modes DIR`` it instead dumps, for each drift-drill CLI
+mode (``full``, ``hash``, ``merkle``, ``iblt``), the formatted plan of
+every Spark action the mode runs on a small generated drifted pair —
+eager verdict/checkpoint/count jobs included, in run order — to
+``DIR/<mode>_<suffix>.txt``:
+
+    python scripts/dump_plans.py --cli-modes plans/<change> --suffix after
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -153,7 +164,124 @@ tests in test_persist.py).
 """
 
 
+#: drift-drill CLI modes -> the calls ``scribedb_spark.cli`` makes
+CLI_MODES = ("full", "hash", "merkle", "iblt")
+
+#: DataFrame methods that run Spark jobs (first/take/head go through
+#: collect)
+_ACTIONS = ("collect", "count", "localCheckpoint")
+
+
+def _formatted(df) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode).strip()
+
+
+@contextlib.contextmanager
+def _record_actions(out: list[str]):
+    """Append the formatted plan of every DataFrame action run inside
+    the block to ``out``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    saved = {name: getattr(DataFrame, name) for name in _ACTIONS}
+
+    def make(name, orig):
+        def recorded(df, *a, **k):
+            out.append(f"-- {name}\n{_formatted(df)}")
+            return orig(df, *a, **k)
+
+        return recorded
+
+    try:
+        for name, orig in saved.items():
+            setattr(DataFrame, name, make(name, orig))
+        yield
+    finally:
+        for name, orig in saved.items():
+            setattr(DataFrame, name, orig)
+
+
+def _drift_fixture(spark, root: str) -> str:
+    """A 20k-row keyed pair with one changed, one removed and one added
+    row, chunked at 5000 rows; returns the compare YAML path."""
+    from pyspark.sql import functions as F
+
+    src = spark.range(20_000).select(
+        F.col("id").alias("row_id"),
+        (F.col("id") % 50).alias("l_quantity"),
+        F.element_at(F.array(*map(F.lit, "ANR")), (F.col("id") % 3 + 1).cast("int"))
+        .alias("l_returnflag"),
+    )
+    tgt = (
+        src.filter(F.col("row_id") != 12_345)
+        .withColumn(
+            "l_quantity",
+            F.when(F.col("row_id") == 777, 99).otherwise(F.col("l_quantity")),
+        )
+        .unionByName(
+            spark.range(1).select(
+                F.lit(50_000).cast("long").alias("row_id"),
+                F.lit(1).cast("long").alias("l_quantity"),
+                F.lit("N").alias("l_returnflag"),
+            )
+        )
+    )
+    src.write.parquet(f"{root}/src")
+    tgt.write.parquet(f"{root}/tgt")
+    path = f"{root}/compare.yaml"
+    with open(path, "w") as f:
+        f.write(
+            "compare:\n"
+            f"  source: {{db: {{type: parquet, path: {root}/src}}, name: src}}\n"
+            f"  target: {{db: {{type: parquet, path: {root}/tgt}}, name: tgt}}\n"
+            "  keys: [row_id]\n  sort_keys: [row_id]\n  bucket_rows: 5000\n"
+        )
+    return path
+
+
+def dump_cli_modes(out_dir: str, suffix: str) -> None:
+    from scribedb_spark import config
+    from scribedb_spark.session import get_spark
+
+    spark = get_spark(app_name="dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(out_dir, exist_ok=True)
+    with tempfile.TemporaryDirectory() as root:
+        cfg = config.load_config(_drift_fixture(spark, root))
+
+        def run(mode: str) -> None:
+            if mode in ("full", "hash"):
+                res = config.run_compare_config(spark, cfg, with_chunks=mode == "hash")
+                res.diff.collect()
+                if mode == "full":
+                    res.changed_cols.collect()
+                else:
+                    res.chunk_status.collect()
+            elif mode == "merkle":
+                config.run_merkle_config(spark, cfg).collect()
+            else:
+                config.run_iblt_config(spark, cfg).collect()
+
+        for mode in CLI_MODES:
+            plans: list[str] = []
+            with _record_actions(plans):
+                run(mode)
+            text = "\n\n".join(plans).replace(root, "<fixture>")
+            dest = os.path.join(out_dir, f"{mode}_{suffix}.txt")
+            with open(dest, "w") as fh:
+                fh.write(f"# CLI mode {mode}: {len(plans)} actions\n\n{text}\n")
+            print(f"wrote {dest}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--cli-modes", metavar="DIR", help="dump the drift-drill CLI modes' plans")
+    ap.add_argument("--suffix", default="after", help="file name suffix (before/after)")
+    args = ap.parse_args()
+    if args.cli_modes:
+        dump_cli_modes(args.cli_modes, args.suffix)
+        return
     from scribedb_spark import queries as Q
     from scribedb_spark.session import get_spark
 

@@ -670,3 +670,85 @@ def test_cli_iblt_mode_validates_preconditions(spark, sf_dir, tmp_path):
             )
             + "  sort_keys: [o_orderkey]\n"
         )
+
+
+#: Spark jobs each CLI mode may launch on the drifted fixture below,
+#: results collected: the measured count plus one job of slack. Every
+#: per-side pass runs once over both sides, so bringing one back — a
+#: key check, a guard, or a row numbering with its range sample,
+#: checkpoint and count jobs — breaks these.
+MODE_JOB_CEILINGS = {"full": 15, "hash": 21, "merkle": 17, "iblt": 10}
+
+
+def test_cli_mode_spark_job_ceilings(spark, tmp_path):
+    """Each drift-drill CLI mode, run under its own job group on a
+    small drifted pair (one changed, one removed, one added row), stays
+    within its Spark job ceiling."""
+    from pyspark.sql import functions as F
+
+    from scribedb_spark.config import run_iblt_config, run_merkle_config
+
+    base = spark.range(2000).select(
+        F.col("id").alias("row_id"),
+        (F.col("id") % 7).alias("qty"),
+        F.concat(F.lit("n"), F.col("id").cast("string")).alias("note"),
+    )
+    tgt = (
+        base.filter(F.col("row_id") != 1200)
+        .withColumn(
+            "qty", F.when(F.col("row_id") == 42, 99).otherwise(F.col("qty"))
+        )
+        .unionByName(
+            spark.range(1).select(
+                F.lit(5000).cast("long").alias("row_id"),
+                F.lit(1).cast("long").alias("qty"),
+                F.lit("new").alias("note"),
+            )
+        )
+    )
+    base.write.parquet(str(tmp_path / "src"))
+    tgt.write.parquet(str(tmp_path / "tgt"))
+    p = tmp_path / "cmp.yaml"
+    p.write_text(
+        f"""
+compare:
+  source: {{db: {{type: parquet, path: "{tmp_path / 'src'}"}}, name: src}}
+  target: {{db: {{type: parquet, path: "{tmp_path / 'tgt'}"}}, name: tgt}}
+  keys: [row_id]
+  sort_keys: [row_id]
+  bucket_rows: 500
+"""
+    )
+    cfg = load_config(str(p))
+
+    def full():
+        res = run_compare_config(spark, cfg)
+        assert res.diff_count == 4
+        res.diff.collect()
+        assert len(res.changed_cols.collect()) == 3
+
+    def hash_():
+        res = run_compare_config(spark, cfg, with_chunks=True)
+        chunks = res.chunk_status.collect()
+        assert [r["chunk_id"] for r in chunks if r["status"] == "NOK"] == [0, 2, 3]
+
+    def merkle():
+        drill = run_merkle_config(spark, cfg).collect()
+        assert sorted(r["chunk_id"] for r in drill) == [0, 2, 3]
+
+    def iblt():
+        assert len(run_iblt_config(spark, cfg).collect()) == 3
+
+    sc = spark.sparkContext
+    got = {}
+    for mode, fn in (("full", full), ("hash", hash_), ("merkle", merkle), ("iblt", iblt)):
+        group = f"job-ceiling-{mode}-{id(tmp_path)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        got[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {m: n for m, n in got.items() if n > MODE_JOB_CEILINGS[m]}
+    assert not over, f"jobs {got} over the ceilings {MODE_JOB_CEILINGS}"

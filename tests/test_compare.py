@@ -358,3 +358,154 @@ def test_bucket_recommendation_null_when_no_power_fits(spark):
     assert set(rows) == {"huge", "ok"}
     assert rows["huge"]["rec_buckets"] is None
     assert rows["ok"]["rec_buckets"] == 2
+
+
+def _keyed_pair(spark):
+    """Keyed sides covering the diff-derived report's edge cases: a
+    NULL key, NULL payloads, NaN and -0.0 payloads, decimals, and
+    added / removed / changed rows among unchanged filler."""
+    from decimal import Decimal as D
+
+    schema = "k int, a double, b decimal(10,2), c string"
+    nan = float("nan")
+    filler = [(i, i * 0.5, D(f"{i}.25"), f"f{i}") for i in range(100, 140)]
+    src = [
+        (None, 1.0, D("1.00"), "x"),  # changed a, under a NULL key
+        (1, nan, D("2.50"), "a"),  # NaN == NaN: unchanged
+        (2, -0.0, D("3.00"), "b"),  # -0.0 == 0.0: unchanged
+        (3, 1.5, None, "c"),  # NULL == NULL: unchanged
+        (4, 2.0, None, "d"),  # changed b: NULL -> value
+        (5, nan, D("5.00"), None),  # changed a and c
+        (6, 0.0, D("6.00"), "f"),  # removed
+        (8, -0.0, D("8.00"), "h"),  # changed b
+    ]
+    tgt = [
+        (None, 2.0, D("1.00"), "x"),
+        (1, nan, D("2.50"), "a"),
+        (2, 0.0, D("3.00"), "b"),
+        (3, 1.5, None, "c"),
+        (4, 2.0, D("4.00"), "d"),
+        (5, 1.0, D("5.00"), "e"),
+        (7, 7.0, D("7.00"), "g"),  # added
+        (8, -0.0, D("8.10"), "h"),
+    ]
+    return (
+        spark.createDataFrame(src + filler, schema),
+        spark.createDataFrame(tgt + filler, schema),
+    )
+
+
+def test_compare_keyed_reports_from_diff_match_full_data(spark):
+    """compare() pairs its keyed reports from the symmetric diff's own
+    rows; with a unique key per side they must equal keyed_diff /
+    keyed_diff_cols run on the full inputs — same keys, change classes
+    and changed columns, whatever row_limit and max_delta say. Payload
+    structs read as the diff renders them (-0.0 as 0.0), so floats are
+    compared by value."""
+    import math
+
+    from scribedb_spark.compare import keyed_diff_cols
+
+    src, tgt = _keyed_pair(spark)
+
+    def norm(v):
+        if isinstance(v, float):
+            return "nan" if math.isnan(v) else v + 0.0  # -0.0 -> 0.0
+        if hasattr(v, "asDict"):
+            return tuple(norm(x) for x in v)
+        return v
+
+    def rows(df):
+        return sorted(
+            (tuple(norm(x) for x in r) for r in df.collect()), key=repr
+        )
+
+    want_cols = rows(keyed_diff_cols(src, tgt, ["k"]))
+    want_kd = rows(keyed_diff(src, tgt, ["k"]))
+    assert {(r[0], r[1]) for r in want_cols} == {
+        (None, "changed"),
+        (4, "changed"),
+        (5, "changed"),
+        (6, "removed"),
+        (7, "added"),
+        (8, "changed"),
+    }
+    for max_delta, equal in ((2, False), (50, True)):
+        res = compare(
+            src, tgt, CompareSpec(keys=["k"], row_limit=3, max_delta=max_delta)
+        )
+        assert res.diff_count == 10 and res.equal is equal
+        assert len(res.diff.collect()) == 3
+        assert rows(res.changed_cols) == want_cols
+        assert rows(res.keyed_diff) == want_kd
+
+
+def test_compare_rejects_non_unique_key_naming_side(spark):
+    """The one grouped key check over both sides still raises and
+    names the side that holds the duplicate (src first when both do)."""
+    src, tgt = _keyed_pair(spark)
+    dup_src = src.unionByName(src.filter(F.col("k") == 100))
+    dup_tgt = tgt.unionByName(tgt.filter(F.col("k") == 100))
+    spec = CompareSpec(keys=["k"])
+    with pytest.raises(ValueError, match="not unique on the src side"):
+        compare(dup_src, tgt, spec)
+    with pytest.raises(ValueError, match="not unique on the tgt side"):
+        compare(src, dup_tgt, spec)
+    with pytest.raises(ValueError, match="not unique on the src side"):
+        compare(dup_src, dup_tgt, spec)
+
+
+def _pair(spark, n):
+    return spark.range(n).select("id", (F.col("id") * 2).alias("v"))
+
+
+@pytest.mark.parametrize(
+    "n_src,n_tgt",
+    [(20, 21), (21, 20), (20, 0), (0, 20)],
+    ids=["tgt-extra-chunk", "src-extra-chunk", "empty-tgt", "empty-src"],
+)
+def test_one_sided_chunks_flagged_by_chunks_and_merkle(spark, n_src, n_tgt):
+    """A chunk that exists on one side only — a trailing row that
+    starts a new chunk, or a whole empty side — is NOK in the chunk
+    report and differs in the merkle drill (which once inner-joined
+    levels on node_id, so tgt = src plus one trailing row came back as
+    an empty drill and the CLI printed 'Datasets are identicals'). Both
+    agree chunk for chunk: same ids, NULL on the same side, and the
+    merkle leaf hash is the chunk fingerprint mod 2^61-1. The
+    persisted-tree path (per-side merkle_levels) gives the same drill."""
+    from scribedb_spark.compare import _MERSENNE61, merkle_drill, merkle_levels
+
+    src, tgt = _pair(spark, n_src), _pair(spark, n_tgt)
+    assert compare(src, tgt).equal is False
+    spec = CompareSpec(sort_keys=["id"], bucket_rows=5)
+    nok = {
+        r["chunk_id"]: r
+        for r in chunk_fingerprints(src, tgt, spec).collect()
+        if r["status"] == "NOK"
+    }
+    drill = {
+        r["chunk_id"]: (r["h_src"], r["h_tgt"])
+        for r in merkle_drill(src, tgt, ["id", "v"], ["id"], bucket_rows=5).collect()
+    }
+    lo, hi = min(n_src, n_tgt), max(n_src, n_tgt)
+    want = set(range(lo // 5, (hi + 4) // 5))
+    assert set(nok) == set(drill) == want
+
+    def h(fp):
+        return None if fp is None else str(int(fp) % _MERSENNE61)
+
+    for cid, r in nok.items():
+        assert drill[cid] == (h(r["src_fp"]), h(r["tgt_fp"]))
+        assert (r["src_rows"] is None) == (drill[cid][0] is None)
+        assert (r["tgt_rows"] is None) == (drill[cid][1] is None)
+    persisted = merkle_drill(
+        src,
+        tgt,
+        ["id", "v"],
+        ["id"],
+        src_levels=merkle_levels(src, ["id", "v"], ["id"], 5),
+        tgt_levels=merkle_levels(tgt, ["id", "v"], ["id"], 5),
+    )
+    assert {
+        r["chunk_id"]: (r["h_src"], r["h_tgt"]) for r in persisted.collect()
+    } == drill
